@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,20 +10,9 @@ object Verify {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(",").toSeq))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Older testdata generations carry TIMESTAMP(NANOS) events; keep the
-      // legacy read path open and let Tables.eventsMicros dispatch on the
-      // loaded schema (nanos-as-long vs native µs).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the benched session: the hashes are checked under the plan config
+    // that is timed
+    val spark = graft.core.Session.local(graft.core.Session.cpus)
     new java.io.File(outDir).mkdirs()
     // A query that throws (analysis or execution) must surface as a RED row
     // in the driver's compare, never a silently-missing one: dump a

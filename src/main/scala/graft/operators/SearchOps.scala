@@ -393,13 +393,15 @@ object SearchOps {
     val ctx = snippets.zipWithIndex
       .map { case ((path, text), i) => s"[${i + 1}] ($path)\n$text" }
       .mkString("\n\n")
-    s"""Answer the question using ONLY the context below. If the context is
-       |insufficient, say so.
-       |
-       |Context:
-       |$ctx
-       |
-       |Question: $question
-       |Answer:""".stripMargin
+    // stripMargin on the template alone: run over the interpolated text it
+    // would eat a leading `|` of a snippet or question line (a CSV chunk
+    // cut just before a cell separator)
+    val preamble =
+      """Answer the question using ONLY the context below. If the context is
+        |insufficient, say so.
+        |
+        |Context:
+        |""".stripMargin
+    s"$preamble$ctx\n\nQuestion: $question\nAnswer:"
   }
 }

@@ -1338,7 +1338,7 @@ object PipelineCatalog {
     // untouched. The dense arm stays the EXACT brute cosine: RRF fuses
     // ranks, and the oracle pins exact ranks (the IVF-served approximate
     // hybrid is q151, with its rank-agreement curve measured per probe
-    // budget in tools/HybridAgree / PROFILE_r18 §2).
+    // budget in tools/HybridAgree, last in commit 160b9be / PROFILE_r18 §2).
     val idx = graft.sources.TextIndex.ensure(s, docsWide(s, d), "doc_id", "text", d)
     val bmTop = graft.operators.SearchOps.bm25ScoresIndexed(
         idx, Bm25Terms, k1 = 1.5, b = 0.75)
@@ -5567,10 +5567,11 @@ object PipelineCatalog {
   // once and looping in memory with a priority structure is the
   // architecture real trainers use; the per-round cost is then bounded by
   // the words CONTAINING the winning pair, not by corpus size or round
-  // count. tools/BpeDepth measures the induction wall-time at
-  // K = 6 … 16384 (SCALING ledger row 28); KernelsSpec pins the local
-  // trainer's merges byte-equal to the retained distributed round
-  // (bpeRoundDistributed) at every depth of the shipped K=6 chain, and
+  // count. tools/BpeDepth (last in commit 160b9be) measured the induction
+  // wall-time at K = 6 … 16384 (SCALING ledger row 28); KernelsSpec pins
+  // the local trainer's merges byte-equal to the retained distributed
+  // round (bpeRoundDistributed) at every depth of the shipped K=6 chain,
+  // and
   // the DuckDB oracle's unrolled per-round replay (q120CteChain) stays
   // the cross-engine proof of both the argmax and every application.
   //
@@ -5698,7 +5699,8 @@ object PipelineCatalog {
     * per-round cost is independent of both corpus size and round count —
     * the property that makes a 32k-merge vocabulary tractable where the
     * one-Spark-job-per-round shape was 32k sequential scheduling floors
-    * (measured curve: tools/BpeDepth, SCALING ledger row 28).
+    * (measured curve: tools/BpeDepth, last in commit 160b9be; SCALING ledger
+    * row 28).
     *
     * Semantics are EXACTLY the distributed round's: overlapping adjacent
     * pair counts weighted by word freq; argmax (count DESC, lhs, rhs) —
@@ -9357,15 +9359,17 @@ object PipelineCatalog {
   // fused with the BM25 top-50 replay by 1/(60+rank) — rational
   // arithmetic over engine-exact integer ranks, so the fusion
   // hash-matches. Rank agreement vs exact q61 is MEASURED per probe
-  // budget (tools/HybridAgree sweep; PROFILE_r18), the q121/q128
-  // discipline: never trust a pruned index without its recall curve.
+  // budget (tools/HybridAgree sweep, last in commit 160b9be; PROFILE_r18),
+  // the q121/q128 discipline: never trust a pruned index without its
+  // recall curve.
   // -------------------------------------------------------------------------
 
   private val HybridNProbe = 8
 
   /** The store-served fused ranking, parameterized by the dense arm's
     * probe budget — q151 is the `HybridNProbe` instance; tools/HybridAgree
-    * sweeps the budget to measure rank agreement vs exact q61.
+    * (last in commit 160b9be) swept the budget to measure rank agreement vs
+    * exact q61.
     */
   private[graft] def hybridServed(s: SparkSession, d: String,
       nProbe: Int): DataFrame = {

@@ -1,7 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.File
+import java.nio.file.{FileSystemException, Files, Path, Paths, StandardCopyOption}
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.{Session, Tables}
+import graft.sources.GenStore
 
 /** Per-query CORE-scaling draw at a compute-bound size (r17 verdict #8):
   * every parallelism claim so far rests on sf0.1 numbers, where the median
@@ -40,109 +47,99 @@ object CoreScaling {
     "q121_ann_recall",        // IVF recall curve
     "q128_pq_recall")         // PQ recall curve
 
+  /** The REPS× corpus directory for `sfDir`: one per (source path, reps),
+    * shared by Bench's scale check, this tool and Q88Profile.
+    */
+  def scaledDir(sfDir: String, reps: Int): File = {
+    val src = new File(s"$sfDir/documents.parquet").getAbsolutePath
+    val sig = java.security.MessageDigest.getInstance("MD5")
+      .digest(s"$src#scale$reps".getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    new File(System.getProperty("java.io.tmpdir"), s"graft-scale-$sig")
+  }
+
+  /** Build (once, manifest-gated) the REPS× corpus: the union of REPS
+    * letter-permuted replicas of the documents table, the other tables
+    * symlinked. translate() with a per-replica alphabet permutation keeps
+    * every char count, line length and within-replica duplicate structure
+    * while making shingle sets across replicas disjoint; a plain copy would
+    * weld each doc into a REPS-clique of near-dups and measure a different
+    * workload, not a bigger one. The corpus is written to a temporary
+    * sibling and published by an atomic rename, so a concurrent run never
+    * sees a half-written or half-deleted directory.
+    * Returns (dir, seconds spent generating).
+    */
+  def ensureScaledCorpus(spark: SparkSession, sfDir: String,
+      reps: Int): (String, Double) = {
+    val dir = scaledDir(sfDir, reps).toPath
+    val srcDocs = new File(s"$sfDir/documents.parquet")
+    val expected = s"""{"source_stamp":"${GenStore.sourceStamp(srcDocs)}",""" +
+      s""""reps":$reps,"scenario":"scale-v1"}"""
+    def fresh: Boolean = {
+      val mf = dir.resolve("_graft_manifest.json")
+      Files.exists(mf) && Files.readString(mf) == expected
+    }
+    def delete(p: Path): Unit = if (Files.exists(p)) FileUtils.deleteDirectory(p.toFile)
+    val t0 = System.nanoTime()
+    if (!fresh) {
+      val tmp = Files.createTempDirectory(dir.getParent, s"${dir.getFileName}.")
+      Tables.names.filter(_ != "documents").foreach { n =>
+        Files.createSymbolicLink(tmp.resolve(s"$n.parquet"), Paths.get(s"$sfDir/$n.parquet"))
+      }
+      val docs = spark.read.parquet(srcDocs.toString)
+      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
+      val alpha = "abcdefghijklmnopqrstuvwxyz"
+      // deterministic per-replica permutation (LCG-seeded Fisher-Yates)
+      def perm(rep: Int): String = {
+        val a = alpha.toCharArray
+        var x = rep.toLong * 2654435761L + 1013904223L
+        for (i <- a.length - 1 to 1 by -1) {
+          x = (x * 6364136223846793005L + 1442695040888963407L) & Long.MaxValue
+          val j = (x % (i + 1)).toInt
+          val t = a(i); a(i) = a(j); a(j) = t
+        }
+        new String(a)
+      }
+      (0 until reps).map { r =>
+        val base = docs.withColumn("doc_id", col("doc_id") + lit(r.toLong * maxId))
+        if (r == 0) base
+        else {
+          val p = perm(r)
+          base.withColumn("text", translate(col("text"),
+            alpha + alpha.toUpperCase, p + p.toUpperCase))
+        }
+      }.reduce(_ unionByName _).write.parquet(s"$tmp/documents.parquet")
+      Files.writeString(tmp.resolve("_graft_manifest.json"), expected)
+      if (fresh) delete(tmp) // a concurrent run published first
+      else {
+        delete(dir)
+        try Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
+        catch { case e: FileSystemException =>
+          delete(tmp)
+          if (!fresh) throw e
+        }
+      }
+    }
+    (dir.toString, (System.nanoTime() - t0) / 1e9)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(10)
-    val hi = args.lift(2).map(_.toInt).getOrElse(
-      Runtime.getRuntime.availableProcessors())
+    val hi = args.lift(2).map(_.toInt).getOrElse(Session.cpus)
     val lo = args.lift(3).map(_.toInt).getOrElse(math.max(2, hi / 4))
-
-    def session(cpus: Int): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus.toString)
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          (cpus * 8).toString)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-
-    def mat(df: DataFrame): Unit = {
-      val h = xxhash64(df.columns.map(col).toIndexedSeq: _*)
-      df.select(h.as("h")).agg(expr("bit_xor(h)")).head()
-    }
-
-    // REPS× corpus: byte-identical recipe AND manifest signature as
-    // Bench's scale_check (md5 of "path#scaleN", scenario scale-v1), so
-    // whichever runs first builds it and the other reuses it.
-    def ensureScaledCorpus(spark: SparkSession): String = {
-      val srcDocs = new java.io.File(s"$sfDir/documents.parquet")
-      val sig = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"${srcDocs.getAbsolutePath}#scale$reps".getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"), s"graft-scale-$sig")
-      val mfPath = java.nio.file.Paths.get(dir.toString, "_graft_manifest.json")
-      val expected = {
-        val stamp = graft.sources.GenStore.sourceStamp(srcDocs)
-        s"""{"source_stamp":"$stamp","reps":$reps,"scenario":"scale-v1"}"""
-      }
-      if (!(java.nio.file.Files.exists(mfPath) &&
-          java.nio.file.Files.readString(mfPath) == expected)) {
-        if (dir.exists()) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(dir.toPath).iterator().asScala.toSeq
-            .sortBy(-_.getNameCount).foreach(java.nio.file.Files.delete)
-        }
-        java.nio.file.Files.createDirectories(dir.toPath)
-        graft.core.Tables.names.filter(_ != "documents").foreach { n =>
-          java.nio.file.Files.createSymbolicLink(
-            java.nio.file.Paths.get(dir.toString, s"$n.parquet"),
-            java.nio.file.Paths.get(s"$sfDir/$n.parquet"))
-        }
-        val docs = spark.read.parquet(srcDocs.toString)
-        val maxId = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-        val alpha = "abcdefghijklmnopqrstuvwxyz"
-        def perm(rep: Int): String = {
-          val a = alpha.toCharArray
-          var x = rep.toLong * 2654435761L + 1013904223L
-          for (i <- a.length - 1 to 1 by -1) {
-            x = (x * 6364136223846793005L + 1442695040888963407L) & Long.MaxValue
-            val j = (x % (i + 1)).toInt
-            val t = a(i); a(i) = a(j); a(j) = t
-          }
-          new String(a)
-        }
-        val scaled = (0 until reps).map { r =>
-          val base = docs.withColumn("doc_id", col("doc_id") + lit(r.toLong * maxId))
-          if (r == 0) base
-          else {
-            val p = perm(r)
-            base.withColumn("text", translate(col("text"),
-              alpha + alpha.toUpperCase, p + p.toUpperCase))
-          }
-        }.reduce(_ unionByName _)
-        scaled.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-        java.nio.file.Files.writeString(mfPath, expected)
-      }
-      dir.toString
-    }
-
-    def cooldown(s: SparkSession): Unit = {
-      s.sqlContext.clearCache(); System.gc(); System.gc(); Thread.sleep(200)
-    }
 
     def measure(cpus: Int, dir: String,
         warmStores: Boolean): Seq[(String, Double)] = {
-      val s = session(cpus)
-      // JIT/codegen warmup at the smallest SF, same as the bench
-      graft.Bench.warmupDir(sfDir).foreach { wd =>
-        try graft.SparkEntry.queries.take(3).foreach { case (_, fn) => mat(fn(s, wd)) }
-        catch { case _: Throwable => }
-      }
+      val s = Session.local(cpus)
+      graft.Bench.warmup(s, sfDir)
       val out = Queries.map { name =>
         val t = try {
-          if (warmStores) { mat(graft.SparkEntry.queries(name)(s, dir)); cooldown(s) }
+          val q = graft.SparkEntry.queries(name)
+          if (warmStores) { Session.drain(q(s, dir)); Session.cooldown(s) }
           (1 to 2).map { i =>
-            if (i > 1) cooldown(s)
+            if (i > 1) Session.cooldown(s)
             val t0 = System.nanoTime()
-            mat(graft.SparkEntry.queries(name)(s, dir))
+            Session.drain(q(s, dir))
             (System.nanoTime() - t0) / 1e9
           }.min
         } catch { case e: Throwable =>
@@ -150,7 +147,7 @@ object CoreScaling {
             e.getMessage.linesIterator.nextOption().getOrElse(""))
           -1.0
         }
-        cooldown(s)
+        Session.cooldown(s)
         println(f"[corescale] $name%-26s @${cpus}%2dc  $t%7.2f s")
         name -> t
       }
@@ -158,8 +155,8 @@ object CoreScaling {
       out
     }
 
-    val s0 = session(hi)
-    val dir = ensureScaledCorpus(s0)
+    val s0 = Session.local(hi)
+    val (dir, _) = ensureScaledCorpus(s0, sfDir, reps)
     s0.stop()
     // hi first (builds the /tmp stores for the scaled corpus on its
     // untimed warm pass), then lo reuses them — both measure warm SERVE

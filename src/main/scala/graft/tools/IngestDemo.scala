@@ -2,9 +2,9 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.operators.{DevEmbed, SearchOps}
 import graft.sources.{ChunkStore, FileIngest, Transcript}
 import graft.streaming.Dropzone
@@ -16,13 +16,7 @@ import graft.streaming.Dropzone
   */
 object IngestDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
 
     val dz = Files.createTempDirectory("demo-dropzone")
     val store = Files.createTempDirectory("demo-store").resolve("chunks").toString

@@ -1,20 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.operators.Similarity
 
 /** Recall-vs-probes sweep for the IVF index over the embeddings table. */
 object IvfTune {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
 
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val corpus = emb.filter(col("vec_id") =!= 0)

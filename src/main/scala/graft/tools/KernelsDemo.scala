@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.functions.{Uuid5, VectorFunctions}
 import graft.operators.{Chunker, DevEmbed}
 
@@ -13,14 +13,7 @@ import graft.operators.{Chunker, DevEmbed}
   */
 object KernelsDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-kernels-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
 
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 

@@ -30,7 +30,7 @@ object MirrorPublish {
     // drives the real entry point; a driver script may publish several
     // stores). Use a LIVE existing session completely untouched — going
     // through the builder would silently apply this tool's runtime confs
-    // (shuffle.partitions=4, UTC, log level) to the HOST's session, a
+    // (shuffle partitions, log level) to the HOST's session, a
     // config leak that outlives the publish — and only stop what this
     // run created. The isStopped filter matters for back-to-back main()
     // calls: a stopped default session can linger until Spark's app-end
@@ -38,16 +38,7 @@ object MirrorPublish {
     val existing = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession)
       .filterNot(_.sparkContext.isStopped)
-    val spark = existing.getOrElse {
-      val s = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    val spark = existing.getOrElse(graft.core.Session.local(graft.core.Session.cpus))
 
     val t = JdbcMirror.Target(url,
       sys.env.getOrElse("GRAFT_PG_USER", ""),

@@ -2,9 +2,9 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.operators.{DevEmbed, Multimodal}
 import graft.sources.{Exports, FileIngest, Note2Json}
 
@@ -14,12 +14,7 @@ import graft.sources.{Exports, FileIngest, Note2Json}
   */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
 
     val dz = Files.createTempDirectory("pipe-dz")
     Files.writeString(dz.resolve("journal.md"),

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 
 /** Drives the SQL-facing surface: Registry-installed functions +
   * observe-based telemetry, through spark.sql only.
@@ -8,12 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object SqlDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     graft.functions.Registry.install(spark)
     graft.core.Telemetry.install(spark)
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +11,7 @@ import graft.sources.BandStore
   * no-ops, and churn must stay policy-bounded with serving state
   * unchanged across compactions.
   */
-class BandStoreSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BandStoreSpec extends AnyFunSuite with SharedSpark {
 
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("bandstore-spec").toString

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +9,7 @@ import graft.sources.{ChatExport, Transcript}
   * (worker/app/services/parse_chatgpt.py, parse_transcript.py) over
   * self-authored fixtures in the same export/transcript formats.
   */
-class ChatTranscriptSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ChatTranscriptSpec extends AnyFunSuite with SharedSpark {
 
   private val exportJson =
     """[

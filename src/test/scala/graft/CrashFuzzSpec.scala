@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,14 +24,7 @@ import graft.sources.{BandStore, GenStore, TextIndex, VectorStore}
   * TextIndex's two artifacts) did not. A replay of the same batch then
   * converges to exactly the post state.
   */
-class CrashFuzzSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CrashFuzzSpec extends AnyFunSuite with SharedSpark {
 
   private final class Injected extends RuntimeException("injected crash")
 

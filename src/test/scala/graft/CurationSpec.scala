@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +10,7 @@ import graft.operators.Curation
   * mitigation for q102's admission rule — a documented mitigation that
   * isn't proven equivalent is a foot-gun, not a mitigation).
   */
-class CurationSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CurationSpec extends AnyFunSuite with SharedSpark {
 
   private def hotCorpus(n: Int, hotFrac: Double) = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
@@ -11,13 +10,7 @@ import graft.operators.Dedup
   * O(log diameter) rounds, and a genuine non-convergence must THROW
   * instead of silently returning split clusters.
   */
-class DedupClusterSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupClusterSpec extends AnyFunSuite with SharedSpark {
 
   test("200-long chain converges within default maxIters (pointer jumping)") {
     import spark.implicits._

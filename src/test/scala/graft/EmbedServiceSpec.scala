@@ -2,7 +2,6 @@ package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -53,13 +52,7 @@ class MustNotCallStub extends Transport {
   * dev-mode bit-parity with the DevEmbed oracle path, and the batch size
   * seen by the server.
   */
-class EmbedServiceSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EmbedServiceSpec extends AnyFunSuite with SharedSpark {
 
   private val mapper = new ObjectMapper()
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,15 +12,7 @@ import graft.streaming.EventStream.Event
   * flatMapGroupsWithState sessionization vs the oracle-verified q24
   * sessionizer (SURVEY §2.9; prompt streaming toolkit).
   */
-class EventStreamSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EventStreamSpec extends AnyFunSuite with SharedSpark {
 
   private val Sf = "/root/testdata/sf0.001"
 

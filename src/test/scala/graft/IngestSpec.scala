@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,14 +15,7 @@ import graft.sources.{ChunkStore, FileIngest}
   * test_parse_json_unit.py); idempotency mirrors smoke_golden.py's
   * double-run invariant.
   */
-class IngestSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IngestSpec extends AnyFunSuite with SharedSpark {
 
   private def writeFixtures(dir: Path): Unit = {
     Files.writeString(dir.resolve("notes.txt"), "hello world this is a plain note")
@@ -202,6 +194,16 @@ class IngestSpec extends AnyFunSuite {
     assert(snips.length == 5) // maxSnippets, well under budget
     assert(snips.map(_.getAs[String]("id")).toSeq ==
       Seq("id1", "id2", "id3", "id4", "id5"))
+  }
+
+  test("ask prompt carries '|'-leading snippet and question lines verbatim") {
+    // a CSV chunk cut just before a cell separator starts with '|'
+    val snippet = "| widget | 7\n| sprocket | 12"
+    val question = "which item is this row?\n| sprocket | 12"
+    val p = SearchOps.buildPrompt(question, Seq(("data/inventory.csv", snippet)))
+    assert(p.contains(s"[1] (data/inventory.csv)\n$snippet\n"), p)
+    assert(p.contains(s"Question: $question\nAnswer:"), p)
+    assert(p.startsWith("Answer the question using ONLY the context below."), p)
   }
 
   test("typed Dataset[Chunk] view over ingest output") {

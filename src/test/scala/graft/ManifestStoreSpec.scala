@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,13 +12,7 @@ import graft.sources.ManifestStore
   * shards are never rewritten, and the incrementally-folded signatures
   * equal a full recompute over the combined span set.
   */
-class ManifestStoreSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ManifestStoreSpec extends AnyFunSuite with SharedSpark {
 
   private val P = ManifestStore.Params(epochs = 2, buckets = 1000L,
     seqLen = 16L, shards = 4L)

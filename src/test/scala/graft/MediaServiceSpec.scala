@@ -2,7 +2,6 @@ package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.MediaService
@@ -41,13 +40,7 @@ class MustNotCallMediaStub extends Transport {
   * with the reference (parse_audio.py:27-32 verbatim stub; images.py
   * empty-caption soft-fallback), fail-soft vs dead-backend threshold.
   */
-class MediaServiceSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MediaServiceSpec extends AnyFunSuite with SharedSpark {
 
   private def mediaDf(n: Int) = {
     import spark.implicits._

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,14 +32,7 @@ import graft.queries.Catalog
   * corpus first has at sf0.1 (8 duplicate classes, 1 in the video slot) —
   * those two families run there; the rest run at sf0.01.
   */
-class MutationAuditSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MutationAuditSpec extends AnyFunSuite with SharedSpark {
 
   private val Sf01 = "/root/testdata/sf0.01"
   private val Sf1 = "/root/testdata/sf0.1"

@@ -3,26 +3,25 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Session
+
 /** Plan-shape regression guards: the physical-plan properties the 100 TB
   * design depends on (SCALING.md). A future change that silently loses
   * pushdown, broadcasts, or top-k short-circuits fails here, not in
   * production.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with SharedSpark {
 
   private val Sf = "/root/testdata/sf0.001"
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // plan-string assertions match on scan LOCATION paths; the default
-    // 100-char metadata truncation can cut the table dir name off deep
-    // artifact paths (".../postings/e1" -> ".../postin...")
-    .config("spark.sql.maxMetadataStringLength", "1000")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // plan-string assertions match on scan LOCATION paths; the default
+  // 100-char metadata truncation can cut the table dir name off deep
+  // artifact paths (".../postings/e1" -> ".../postin...")
+  override protected lazy val spark: SparkSession = {
+    val s = Session.local(Session.cpus)
+    s.conf.set("spark.sql.maxMetadataStringLength", "1000")
+    s
+  }
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, Sf).queryExecution.executedPlan.toString

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +14,7 @@ import graft.operators.QualityModel
   * oracle row pins end-to-end value parity; these tests pin the state
   * machine.)
   */
-class QualityModelSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QualityModelSpec extends AnyFunSuite with SharedSpark {
 
   /** A tiny corpus with separable quality: "good" docs are stopword-rich
     * medium-length English, "bad" docs are one long unbroken token.

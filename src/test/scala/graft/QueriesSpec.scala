@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke + invariant tests for the full query catalog at sf0.001.
@@ -8,17 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * tools/oracle_check.py for the dev loop); these tests pin structural
   * invariants the oracle can't see.
   */
-class QueriesSpec extends AnyFunSuite {
+class QueriesSpec extends AnyFunSuite with SharedSpark {
 
   private val Sf = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
 
   test("every catalog query runs and returns rows at sf0.001") {
     // no exemptions: q140's in-query syndication fixtures (doc_id % 97
@@ -1328,7 +1319,7 @@ class QueriesSpec extends AnyFunSuite {
     // (2) Zipf synth table at K=256 — production-shaped vocabulary depth,
     // through BOTH the kernel and the codegen'd expression, against the
     // literal driver-side fold of leftmost-non-overlapping replaces
-    val synth = graft.tools.BpeDepth.synthTable(2000)
+    val synth = BpeSynth.synthTable(2000)
     val m256 = PipelineCatalog.trainBpeLocal(synth, 256).map(m => (m._1, m._2))
     assert(m256.size == 256, s"synth induction exhausted at ${m256.size}")
     val auto = new BpeAutomaton(m256.map(_._1).toArray, m256.map(_._2).toArray)

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,14 +24,7 @@ import graft.streaming.Dropzone
   *    grain Structured Streaming executes (foreachBatch serializes batches;
   *    a reconcile runs between them, never inside one).
   */
-class ReconcileSoakSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ReconcileSoakSpec extends AnyFunSuite with SharedSpark {
 
   private def filesFrame(dropzone: String): DataFrame = {
     spark.catalog.refreshByPath(dropzone)

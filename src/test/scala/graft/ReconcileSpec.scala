@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,14 +17,7 @@ import graft.streaming.Dropzone
   * the same blind spot and ships manual cleanup tooling instead
   * (scripts/dev/tools/cleanup_kind.py:53-123, qdrant_delete_by_ids.py).
   */
-class ReconcileSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ReconcileSpec extends AnyFunSuite with SharedSpark {
 
   private def filesFrame(dropzone: String): DataFrame = {
     spark.catalog.refreshByPath(dropzone) // files changed out-of-band

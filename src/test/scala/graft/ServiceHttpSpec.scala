@@ -6,7 +6,6 @@ import java.nio.charset.StandardCharsets
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Static server-side observations: local-mode tasks run in this JVM, but
@@ -28,13 +27,7 @@ object HttpStubState {
   * framing, HTTP error → fail-soft skip — with nothing mocked inside the
   * JVM's HTTP stack.
   */
-class ServiceHttpSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ServiceHttpSpec extends AnyFunSuite with SharedSpark {
 
   private val mapper = new ObjectMapper()
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,15 +26,9 @@ import graft.operators.{EmbedService, MediaService}
   * pass. It deliberately reuses the production entry points
   * (embedColumn / annotate), not a bespoke client.
   */
-class ServiceSoakSpec extends AnyFunSuite {
+class ServiceSoakSpec extends AnyFunSuite with SharedSpark {
 
   private val servicesUp = sys.env.get("GRAFT_SERVICES_UP").contains("1")
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("embed soak: live backend embeds every row at the declared dim") {
     assume(servicesUp, "GRAFT_SERVICES_UP != 1 — soak skipped (CI is hermetic)")

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,14 +11,7 @@ import graft.streaming.Dropzone
 /** Streaming dropzone: files land → micro-batch → idempotent store upsert
   * (SURVEY §2.9 ST1-ST4).
   */
-class StreamingSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with SharedSpark {
 
   test("files are ingested as they arrive; re-dropped files replace themselves") {
     val dropzone: Path = Files.createTempDirectory("graft-stream-dz")

@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Telemetry
 import graft.functions.Registry
 
-class TelemetrySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TelemetrySpec extends AnyFunSuite with SharedSpark {
 
   test("observe-based ingest metrics are captured by the listener (A4/A7)") {
     import spark.implicits._

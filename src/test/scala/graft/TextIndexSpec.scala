@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +12,7 @@ import graft.sources.TextIndex
   * serving values. (q77 pins end-to-end value parity against the DuckDB
   * inline-BM25 oracle; these tests pin the state machine.)
   */
-class TextIndexSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TextIndexSpec extends AnyFunSuite with SharedSpark {
 
   private def docsDF(rows: (Long, String)*): DataFrame = {
     import spark.implicits._

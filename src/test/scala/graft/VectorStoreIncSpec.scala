@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,13 +13,7 @@ import graft.sources.VectorStore
   * pin end-to-end value parity against the DuckDB replays; these tests
   * pin the state machine.)
   */
-class VectorStoreIncSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VectorStoreIncSpec extends AnyFunSuite with SharedSpark {
 
   private val Dim = 4
 

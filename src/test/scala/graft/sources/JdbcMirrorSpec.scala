@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The relational mirror round-trips against a REAL JDBC engine
   * (embedded Derby — the one in /opt/spark/jars): bootstrap DDL, delta
@@ -10,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * document deletion, all verified by reading back through
   * `spark.read.jdbc`.
   */
-class JdbcMirrorSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class JdbcMirrorSpec extends AnyFunSuite with SharedSpark {
 
   private def freshTarget(tag: String): JdbcMirror.Target = {
     val dir = java.nio.file.Files.createTempDirectory(s"graft-jdbc-$tag")
